@@ -4,10 +4,11 @@ is cross-checked against the plain (unbucketed) join."""
 
 from __future__ import annotations
 
+import os
 import sys
 import uuid
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 

@@ -9,7 +9,7 @@ import os
 import sqlite3
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from wd2sql_spark.__main__ import main
 

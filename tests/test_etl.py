@@ -5,16 +5,17 @@ codec function."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from wd2sql_spark.etl.pipeline import parse_entities, read_dump, transform, wd2spark
 from wd2sql_spark.functions.ids import register_sql_function
 
-FIXTURE = "/root/repo/tests/fixtures/wd_dump.ndjson"
+FIXTURE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures", "wd_dump.ndjson")
 
 
 @pytest.fixture(scope="module")

@@ -6,8 +6,8 @@ The full 189-query diff takes ~45 minutes — longer than the grading
 driver's pytest budget (VERIFY_r09 saw the suite cut off mid-run). By
 default this module therefore runs a bounded, deterministic SMOKE sample
 (every 6th registered query by sorted name — ~32 queries spread across
-every module family). Set ``WD2SQL_FULL_ORACLE=1`` to run the complete
-registry diff:
+every module family — plus the permanent force-includes in ``FORCED``).
+Set ``WD2SQL_FULL_ORACLE=1`` to run the complete registry diff:
 
     WD2SQL_FULL_ORACLE=1 python -m pytest tests/test_oracle_diff.py -q
 
@@ -22,7 +22,7 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tests.oracle_check import compare
 from wd2sql_spark.queries import load_all_modules
@@ -36,6 +36,12 @@ else:
     # Deterministic 1-in-6 slice: stable across runs, touches every module
     # family (names are grouped by module prefix, so a stride samples each).
     SELECTED = ORACLED[::6]
+    # Permanent force-includes, each with its reason:
+    FORCED = {
+        # the only oracle over the store-appending write path
+        "dedup_admission_evolution",
+    }
+    SELECTED = sorted(set(SELECTED) | FORCED)
 
 
 @pytest.mark.parametrize("name", SELECTED)

@@ -6,12 +6,13 @@ rebuild."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from wd2sql_spark.catalog import table
 from wd2sql_spark.operators.postings import (

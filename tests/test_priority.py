@@ -161,6 +161,20 @@ def test_comment_only_touch_moves_no_fingerprint(tmp_path):
     assert _module_ast_hash(str(a)) != h1, "a REAL edit must move the hash"
 
 
+def test_partition_count_tokenized_only_at_session_counts():
+    """The fingerprint must not depend on the core count (the session's
+    shuffle partitions / default parallelism), but any other literal
+    partition count, or a literal inside the partitioning expression,
+    must still move it."""
+    from tools.plan_fp import _tokenize_partition_counts as tok
+
+    plan = "Exchange hashpartitioning(k#1, {}), ENSURE\n+- Repartition {}, true"
+    assert tok(plan.format(4, 4), {4}) == tok(plan.format(32, 32), {32})
+    assert tok(plan.format(8, 8), {4}) != tok(plan.format(9, 9), {4})
+    nested = "hashpartitioning(coalesce(k#1, 4), 8)"
+    assert tok(nested, {4}) == nested
+
+
 def test_fp_match_unflagged_despite_newer_module_timestamp(spark):
     """The r7 failure mode, inverted: a module whose git timestamp is
     newer than the attestation must NOT flag a query whose fingerprint

@@ -22,12 +22,13 @@ broken filter only surfaces as missing rows):
 
 from __future__ import annotations
 
+import os
 import sys
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 

@@ -16,6 +16,7 @@ cross-engine hazards live:
 
 from __future__ import annotations
 
+import os
 import sys
 from collections import Counter
 
@@ -24,7 +25,7 @@ import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from wd2sql_spark.operators.bpe import bpe_merges
 from wd2sql_spark.queries.llm_tokenize import _bpe_oracle

@@ -10,6 +10,7 @@ parse 'Q42abc' to 42 while SQL returned NULL)."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
@@ -17,7 +18,7 @@ import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 

@@ -28,12 +28,13 @@ from __future__ import annotations
 
 import json
 import re
+import os
 import sys
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from wd2sql_spark.etl.pipeline import parse_entities, unified_rows
 

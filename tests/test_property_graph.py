@@ -21,12 +21,13 @@ itself over arbitrary small graphs:
 from __future__ import annotations
 
 import itertools
+import os
 import sys
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from wd2sql_spark.operators.graph_ops import pagerank_ranks, triangles
 

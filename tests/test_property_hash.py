@@ -16,6 +16,7 @@ engines on identical inputs and asserts exact equality.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
@@ -23,7 +24,7 @@ import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 

@@ -7,6 +7,7 @@ bit-for-bit, and projecting a basis vector must read off a sign column.
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import duckdb
@@ -15,7 +16,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from wd2sql_spark.operators.similarity import jl_project, jl_signs
 

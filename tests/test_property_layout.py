@@ -6,6 +6,7 @@ stay inside [0, 2**bits).
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
@@ -14,7 +15,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from wd2sql_spark.operators.layout import scale_to_bits, zorder_sql, zorder_value
 

@@ -17,12 +17,13 @@ are algebraic, not fixture-specific:
 
 from __future__ import annotations
 
+import os
 import sys
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from wd2sql_spark.operators import dedup as D
 

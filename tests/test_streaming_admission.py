@@ -15,7 +15,12 @@ Contracts pinned here:
 - crash healing: a compaction crash that left only ``bands.old`` does
   NOT reset the store (ADVICE r5 #1 — admit_batch recovers before the
   first-drop check), and crash-replay duplicate band rows compact back
-  to the rebuild baseline (``compact_admission_store``).
+  to the rebuild baseline (``compact_admission_store``);
+- within-batch components: a chain A~B, B~C with A≁C is ONE component
+  (keep A only), and only edges between two survivors count — a store
+  duplicate does not pull its batch neighbour into its component;
+- fixed cost: a drop against an existing store runs a bounded number of
+  Spark jobs (one probe, one collect, one append).
 """
 
 from __future__ import annotations
@@ -170,3 +175,77 @@ def test_crash_replay_duplicates_compact_to_rebuild_baseline(spark, tmp_path):
     assert _rows(read_lsh_store(spark, store)) != baseline  # dups present
     compact_admission_store(spark, store)
     assert _rows(read_lsh_store(spark, store)) == baseline
+
+
+# A near-dup CHAIN over sliding windows of distinct words: the md5 minhash
+# is deterministic, so these estimates are fixed (16 hashes): A~B 13/16,
+# B~C 9/16, A~C 6/16 — below the 0.5 threshold and no shared band.
+_WORDS = [f"w{i}" for i in range(46)]
+CHAIN_A = " ".join(_WORDS[0:30])
+CHAIN_B = " ".join(_WORDS[8:38])
+CHAIN_C = " ".join(_WORDS[16:46])
+
+
+def _match_pairs(spark, rows):
+    from wd2sql_spark.operators.dedup import (
+        incremental_index_probe,
+        minhash_band_index_rowlocal,
+    )
+
+    idx = minhash_band_index_rowlocal(
+        spark.createDataFrame(rows, "doc_id long, text string")
+    )
+    return {
+        (r.delta_id, r.corpus_id)
+        for r in incremental_index_probe(idx, idx, min_est_jaccard=0.5).collect()
+        if r.delta_id < r.corpus_id
+    }
+
+
+def test_within_batch_chain_is_one_component(spark, tmp_path):
+    rows = [(1, CHAIN_A), (2, CHAIN_B), (3, CHAIN_C)]
+    assert _match_pairs(spark, rows) == {(1, 2), (2, 3)}  # the premise
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    assert admit_batch(docs, str(tmp_path / "store"), min_est_jaccard=0.5) == [1]
+
+
+def test_store_duplicate_does_not_suppress_its_batch_neighbour(spark, tmp_path):
+    """Doc 2 (the batch's lowest id) near-dups the stored doc 1 and drops;
+    doc 3 near-dups only doc 2. Edges count only between survivors, so
+    doc 3 is its own component and is admitted."""
+    store = str(tmp_path / "store")
+    first = spark.createDataFrame([(1, CHAIN_A)], "doc_id long, text string")
+    assert admit_batch(first, store, min_est_jaccard=0.5) == [1]
+    batch = spark.createDataFrame(
+        [(2, CHAIN_B), (3, CHAIN_C)], "doc_id long, text string"
+    )
+    assert admit_batch(batch, store, min_est_jaccard=0.5) == [3]
+
+
+# Jobs one drop against an existing store may start. It ran 10 on Spark
+# 4.1 (the store's schema read, the probe and its one collect, the
+# append); the two-probe + connected-components loop it replaced ran 36.
+MAX_DROP_JOBS = 12
+
+
+def test_drop_against_store_job_count_is_bounded(spark, tmp_path):
+    store = str(tmp_path / "store")
+    admit_batch(
+        spark.createDataFrame(DROPS[0], "doc_id long, text string"),
+        store,
+        min_est_jaccard=0.5,
+    )
+    sc = spark.sparkContext
+    group = f"admit-drop-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "one admission drop against an existing store")
+    try:
+        got = admit_batch(
+            spark.createDataFrame(DROPS[1], "doc_id long, text string"),
+            store,
+            min_est_jaccard=0.5,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == EXPECTED[1]
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= MAX_DROP_JOBS, f"{len(jobs)} jobs for one drop"

@@ -27,10 +27,11 @@ A query's fingerprint is the sha256 of:
   appear in the plan, only their names do;
 - for queries whose computation is not fully in the final plan — streaming
   queries (the returned frame scans the memory sink) and any plan
-  containing a LocalRelation (driver-side eager loops collect and re-embed
-  without data in the canonical string) — additionally the AST hash of the
-  FULL import closure, falling back to module granularity exactly where
-  plan granularity is blind.
+  containing a LocalRelation or a LogicalRDD (driver-side eager loops
+  collect and re-embed without data in the canonical string; on Spark 4
+  ``createDataFrame`` over a Python list is a LogicalRDD) — additionally
+  the AST hash of the FULL import closure, falling back to module
+  granularity exactly where plan granularity is blind.
 
 ``tools/gen_priority.py`` consumes the committed snapshot
 (``tools/plan_fps.json``: name -> {fp, round}) and flags a query when its
@@ -94,6 +95,41 @@ _LAMBDA_BIND = re.compile(r"\blambda ([A-Za-z]\w*?_\d+)#")
 # completion ORDER — a race, not semantics.
 _QUERY_STAGE = re.compile(r"QueryStage \d+")
 _CODEGEN_ID = re.compile(r"\*\(\d+\)")
+# Partition counts: a physical partitioning prints its count as the last
+# argument (``hashpartitioning(k#1, 4)``, ``RoundRobinPartitioning(4)``),
+# a logical repartition at the end of its node line. The count is the
+# session's shuffle partitions / default parallelism — the host's core
+# count, not semantics — so it is tokenized when it equals one of those;
+# any other literal count still moves the fingerprint.
+_PARTITIONING = re.compile(r"\b\w*[pP]artitioning\(")
+_LOGICAL_REPARTITION = re.compile(
+    r"^([ :|+-]*(?:RepartitionByExpression .*, |Repartition ))(\d+)\b", re.M
+)
+_N_PARTS = "<n_parts>"
+
+
+def _tokenize_partition_counts(s: str, counts: set[int]) -> str:
+    out, pos = [], 0
+    for m in _PARTITIONING.finditer(s):
+        if m.start() < pos:
+            continue
+        depth, i = 1, m.end()
+        while i < len(s) and depth:
+            depth += {"(": 1, ")": -1}.get(s[i], 0)
+            i += 1
+        close = i - 1  # the partitioning's matching ")"
+        args = s[m.end():close]
+        n = args.rpartition(", ")[2]  # the last argument
+        if n.isdigit() and int(n) in counts:
+            args = args[: len(args) - len(n)] + _N_PARTS
+        out.append(s[pos:m.end()] + args)
+        pos = close
+    out.append(s[pos:])
+    s = "".join(out)
+    return _LOGICAL_REPARTITION.sub(
+        lambda m: m.group(1) + (_N_PARTS if int(m.group(2)) in counts else m.group(2)),
+        s,
+    )
 
 
 def _canonical_plan(df) -> str:
@@ -105,7 +141,9 @@ def _canonical_plan(df) -> str:
     runs), and it erases column names — which are driver-comparison
     semantics here. The raw optimized plan keeps source operand order and
     names; the only cross-session noise is the monotonic exprId counter,
-    removed by positional renumbering.
+    removed by positional renumbering. Partition counts equal to the
+    session's shuffle partitions or default parallelism print as a token,
+    so the fingerprint is the same on any core count.
     """
     s = df._jdf.queryExecution().optimizedPlan().toString()
     # Repo-relative fixtures (the wikidata dump) print absolute FileScan
@@ -122,6 +160,14 @@ def _canonical_plan(df) -> str:
         )
     s = _QUERY_STAGE.sub("QueryStage #", s)
     s = _CODEGEN_ID.sub("*(#)", s)
+    spark = df.sparkSession
+    s = _tokenize_partition_counts(
+        s,
+        {
+            int(spark.conf.get("spark.sql.shuffle.partitions")),
+            spark.sparkContext.defaultParallelism,
+        },
+    )
     mapping: dict[str, str] = {}
 
     def sub(m: re.Match) -> str:
@@ -193,7 +239,7 @@ def compute_fps(spark, names: list[str] | None = None) -> dict[str, str]:
                 plan = _canonical_plan(df)
                 h.update(plan.encode())
                 h.update(df.schema.simpleString().encode())
-                plan_blind = "LocalRelation" in plan
+                plan_blind = "LocalRelation" in plan or "LogicalRDD" in plan
             except Exception as e:  # un-buildable → hash the error class
                 h.update(f"build-error:{type(e).__name__}".encode())
                 plan_blind = True
@@ -202,8 +248,8 @@ def compute_fps(spark, names: list[str] | None = None) -> dict[str, str]:
         blind_mods = py_eval_modules(scope)
         if plan_blind:
             # The plan does not carry the computation (stream memory sink,
-            # collected-and-re-embedded LocalRelation): fall back to module
-            # granularity over the whole closure for THIS query only.
+            # collected-and-re-embedded LocalRelation/LogicalRDD): fall back
+            # to module granularity over the whole closure for THIS query.
             blind_mods = sorted(scope)
         for m in blind_mods:
             hm = ast_hash(m)

@@ -465,7 +465,10 @@ def minhash_band_index_rowlocal(docs: DataFrame, k: int = 16, band_size: int = 4
     this form exists for STREAMING delta ingest, where a per-doc
     aggregation would force complete-mode state but a narrow map keeps
     the probe append-exact — and delta docs are typical-sized, not
-    pathological.
+    pathological. Its callers: ``stream_incremental_neardup``'s delta
+    probe, and the admission loop (streaming/admission.admit_batch),
+    which bands each micro-batch once with it and appends those same
+    rows to the LSH store.
 
     The shingle ARRAY is materialized once per row in a child projection
     and the 16 seed folds read the column (r6): inlining the
@@ -549,13 +552,18 @@ def incremental_index_probe(
     delta_index: DataFrame,
     k: int = 16,
     min_est_jaccard: float = 0.0,
+    corpus_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """The probe half of :func:`incremental_minhash_matches`, for callers
     that already hold BOTH banded indexes (e.g. a fixture that bands one
     corpus once and splits it, or a pipeline re-checking two persisted
     drops against each other). Join on (band, band_key) with the delta
     side broadcast; both signatures arrive on the joined row, so the
-    Jaccard estimate is row-local."""
+    Jaccard estimate is row-local.
+
+    ``corpus_cols`` are extra corpus-side columns carried onto every
+    match (and into its DISTINCT key) — the streaming admission loop
+    probes store ∪ delta in one join and tags each match with its side."""
     c = corpus_index.alias("c")
     d = delta_index.alias("d")
     eq = sum(
@@ -571,6 +579,7 @@ def incremental_index_probe(
             F.col("d.doc_id").alias("delta_id"),
             F.col("c.doc_id").alias("corpus_id"),
             (eq / F.lit(float(k))).alias("est_jaccard"),
+            *[F.col(f"c.{col}") for col in corpus_cols],
         )
         .distinct()
         .filter(F.col("est_jaccard") >= min_est_jaccard)

@@ -618,9 +618,9 @@ def dedup_admission_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The INCREMENTAL-ADMISSION loop run to completion: the corpus
     arrives as {ADMIT_DROPS} sequential drops (md5-bucketed), and each
     drop probes the LSH band store of everything admitted so far, drops
-    near-dups (est Jaccard ≥ {ADMIT_T}), resolves within-drop groups by
-    connected components (keep the minimum doc_id), and APPENDS its
-    survivors' bands to the store — streaming/admission.admit_batch,
+    near-dups (est Jaccard ≥ {ADMIT_T}), resolves within-drop groups as
+    the components of the survivor-survivor match edges (keep the minimum
+    doc_id), and APPENDS the admitted docs' bands to the store — streaming/admission.admit_batch,
     which tests/test_streaming_admission.py proves identical to driving
     the same drops through a foreachBatch Structured Streaming query.
     Output: every admitted doc with the drop that admitted it.
@@ -631,8 +631,8 @@ def dedup_admission_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     match proves the ENTIRE evolution (cross-drop suppression included),
     not just one probe. Scale: each drop's work is the judged
     incremental-probe shape (delta broadcast, store never reshuffled)
-    plus batch-sized pair/component relations; the store grows by
-    admitted bands only. Runs eagerly (the store is a real on-disk
+    plus a driver-side union-find over the batch's match rows; the store
+    grows by admitted bands only. Runs eagerly (the store is a real on-disk
     artifact per invocation, built in a temp dir and removed)."""
     import shutil
     import tempfile

@@ -8,13 +8,19 @@ loop as a ``foreachBatch`` sink over the persisted LSH band store
 (sinks/lsh_store.py):
 
 per micro-batch of documents,
-1. probe the current store with the batch's row-local band index —
-   docs matching an already-admitted doc (est Jaccard ≥ threshold) drop;
-2. resolve WITHIN-batch near-dup groups among the remaining docs with
-   the banded pair join + connected components (min-label propagation),
-   keeping the lowest doc_id of each component — deterministic and
-   distributed, no sequential scan over the batch;
-3. append the survivors' band rows to the store
+1. band the batch ONCE with the row-local band index
+   (``minhash_band_index_rowlocal``: a narrow map, no per-doc
+   aggregation) and run ONE broadcast probe of it against
+   store ∪ batch, each match tagged with the side it came from;
+2. collect the matches (est Jaccard ≥ threshold) in ONE Spark action —
+   every batch doc matches itself on the batch side, so they carry the
+   batch's doc ids too — then decide on the driver: docs
+   matching an already-admitted (store) doc drop; among the remaining
+   docs, a union-find over the within-batch edges that join two
+   survivors forms the near-dup components, and each keeps its lowest
+   doc_id — the oracle's keep-min rule over survivor-restricted edges;
+3. append the admitted docs' band rows (the same persisted rows the
+   probe used) to the store through the canonical layout
    (``append_to_lsh_store`` semantics: store+append ≡ full rebuild over
    the admitted set — the property tests/test_lsh_store.py pins).
 
@@ -32,10 +38,17 @@ the only artifact of a crash between append and checkpoint-commit is
 duplicate band ROWS for the same doc, which band-key probes are immune
 to (matches are DISTINCT pairs) and the next compaction removes.
 
-Scale shape: probe is the judged incremental-index join (delta
-broadcast, corpus never reshuffled); within-batch resolution is banded
-pairs + pointer-jumping components over BATCH-sized relations; the
-append writes only the survivors' bands. Nothing corpus-sized moves.
+Scale shape: the probe is the incremental-index join (batch broadcast,
+store never reshuffled) and the append writes only the admitted docs'
+bands; nothing corpus-sized moves. The driver holds one row per batch
+doc plus the match rows with est ≥ threshold — up to 4 per near-dup
+pair (each direction, from the batch side and, on a replay, from the
+store side). That is linear in the batch unless the batch is made of
+copies of one text, where it turns quadratic; the replaced
+connected-components design was quadratic there too (its pair relation)
+but kept it on the executors. Real drops are far from that case: the
+80k-doc scale drops rejected 249–7,410 documents each
+(SCALE_ADMISSION_r07.json).
 """
 
 from __future__ import annotations
@@ -58,61 +71,65 @@ def admit_batch(
     real sink would emit."""
     import os
 
+    import pandas as pd
+
     from wd2sql_spark.operators.dedup import (
-        connected_components,
         incremental_index_probe,
-        minhash_band_index,
+        minhash_band_index_rowlocal,
     )
     from wd2sql_spark.sinks.compact import recover_dataset
-    from wd2sql_spark.sinks.lsh_store import read_lsh_store
+    from wd2sql_spark.sinks.lsh_store import _layout, read_lsh_store
 
-    from wd2sql_spark.sinks.lsh_store import _layout  # canonical band layout
-
+    spark = docs.sparkSession
     # Heal an interrupted compaction swap BEFORE deciding "first drop":
     # a crash between compact's two renames leaves only bands.old, and
-    # skipping the probe here would admit near-dups of everything already
+    # skipping the store here would admit near-dups of everything already
     # in the store AND orphan the .old generation (ADVICE r5 #1).
     recover_dataset(f"{store_path}/bands")
-    delta_idx = minhash_band_index(
+    delta_idx = minhash_band_index_rowlocal(
         docs.select("doc_id", "text"), k=k, band_size=band_size, n=n
     ).persist()
     try:
-        survivors = delta_idx
+        corpus = delta_idx.withColumn("in_store", F.lit(False))
         if os.path.isdir(f"{store_path}/bands"):
-            store = read_lsh_store(docs.sparkSession, store_path)
-            dup_ids = (
-                incremental_index_probe(
-                    store, delta_idx, k=k, min_est_jaccard=min_est_jaccard
-                )
-                .select(F.col("delta_id").alias("doc_id"))
-                .distinct()
-            )
-            survivors = delta_idx.join(dup_ids, "doc_id", "left_anti")
-        # within-batch resolution: banded pairs among survivors → connected
-        # components → keep each component's minimum doc_id
-        pairs = (
+            corpus = read_lsh_store(spark, store_path).withColumn(
+                "in_store", F.lit(True)
+            ).unionByName(corpus)
+        # Every banded batch doc matches itself on the batch side (est 1.0),
+        # so the matches also carry the batch's doc ids: ONE action.
+        rows = (
             incremental_index_probe(
-                survivors, survivors, k=k, min_est_jaccard=min_est_jaccard
+                corpus,
+                delta_idx,
+                k=k,
+                min_est_jaccard=min_est_jaccard,
+                corpus_cols=("in_store",),
             )
-            .filter(F.col("delta_id") != F.col("corpus_id"))
-            .select(
-                F.col("delta_id").alias("src"), F.col("corpus_id").alias("dst")
-            )
+            .select("delta_id", "corpus_id", "in_store")
+            .collect()
         )
-        losers = (
-            connected_components(pairs)
-            .filter(F.col("node") != F.col("cluster_id"))
-            .select(F.col("node").alias("doc_id"))
-        )
-        admitted_idx = survivors.join(losers, "doc_id", "left_anti").persist()
-        admitted = sorted(
-            int(r[0]) for r in admitted_idx.select("doc_id").distinct().collect()
-        )
+        batch = {r[0] for r in rows}
+        store_hits = {r[0] for r in rows if r[2]}
+        # union-find over the edges joining two survivors; each component's
+        # root is its minimum doc_id
+        parent = {d: d for d in batch - store_hits}
+
+        def find(x: int) -> int:
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for a, b, in_store in rows:
+            if not in_store and a in parent and b in parent:
+                ra, rb = find(a), find(b)
+                parent[max(ra, rb)] = min(ra, rb)
+        admitted = sorted(int(d) for d in parent if find(d) == d)
         if admitted:
-            _layout(admitted_idx).write.mode("append").partitionBy("band").parquet(
-                f"{store_path}/bands"
-            )
-        admitted_idx.unpersist()
+            keep = spark.createDataFrame(pd.DataFrame({"doc_id": admitted}))
+            _layout(
+                delta_idx.join(F.broadcast(keep), "doc_id", "left_semi")
+            ).write.mode("append").partitionBy("band").parquet(f"{store_path}/bands")
         return admitted
     finally:
         delta_idx.unpersist()
